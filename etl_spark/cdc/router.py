@@ -42,9 +42,18 @@ the streaming-native upgrade:
 Scale shape: routing metadata (key/bucket spec per destination) is
 O(#tables) driver-side JSON header reads; the validity/bucket routing
 expressions are literal CASE chains (pure codegen, no join); the only
-per-batch Spark work beyond apply_batch's is one filtered scan per
-destination that actually has rows. Hot destinations keep apply_batch's
-skew story (map-side-combined LWW dedup, salted variant).
+per-batch Spark work beyond apply_batch's is one filtered scan and one
+MERGE per destination that actually has rows. Those merges run
+CONCURRENTLY, one worker thread per destination up to the context's
+default parallelism: they write disjoint tables and meet only at the
+one catalog commit, and each is a chain of small latency-bound jobs
+whose driver gaps and thin write stages leave most cores idle when
+they run one after the other. Branch handles open serially in name
+order before the workers start; workers inherit the caller's job
+group and streaming local properties; the catalog commit (or, on any
+worker's failure, the abort of every branch) happens only after every
+worker has returned. Hot destinations keep apply_batch's skew story
+(map-side-combined LWW dedup, salted variant).
 
 Schema note: a heterogeneous WAL's union schema carries every
 destination's payload columns (other tables' columns ride as NULL), so
@@ -58,11 +67,13 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from etl_spark.cdc.apply import dedup_last_writer_wins
 from etl_spark.cdc.metrics import MetricsTable
@@ -311,41 +322,60 @@ def route_batch(
         return _finish()
 
     keep = set(merge_lww_by or ())
+
+    def _merge(name: str, handle: LakeTable) -> dict:
+        info = infos[name]
+        sub = raw.filter(valid_pred & (tbl == name))
+        fn = (transforms or {}).get(name)
+        if fn is not None:
+            sub = fn(sub)
+        deduped = dedup_last_writer_wins(
+            sub, key=info["key"], salted=salted_dedup
+        )
+        # drop the routing column, other destinations' payload columns,
+        # and engine meta (unless the guard keeps an order column or
+        # `evolve` carries a brand-new column in)
+        carry = info["schema_cols"] | {op_col} | keep
+        carry |= set((evolve or {}).get(name, ()))
+        merge_src = deduped.drop(
+            *[c for c in deduped.columns if c not in carry]
+        )
+        # a non-preserving transform invalidates the pre-transform
+        # histogram: hand merge per_bucket=None so it recounts from the
+        # transformed rows (see docstring contract)
+        pb = (
+            per_table_buckets[name]
+            if fn is None or transforms_preserve_keys_and_validity
+            else None
+        )
+        _snap, mstats = handle.merge(
+            merge_src,
+            op_col=op_col,
+            per_bucket=pb,
+            lww_by=list(merge_lww_by) if merge_lww_by else None,
+            mode=merge_mode,
+        )
+        return mstats
+
     with catalog.transaction() as txn:
-        for name in sorted(per_table_buckets):
-            info = infos[name]
-            handle = txn.table(name)
-            sub = raw.filter(valid_pred & (tbl == name))
-            fn = (transforms or {}).get(name)
-            if fn is not None:
-                sub = fn(sub)
-            deduped = dedup_last_writer_wins(
-                sub, key=info["key"], salted=salted_dedup
-            )
-            # drop the routing column, other destinations' payload
-            # columns, and engine meta (unless the guard keeps an order
-            # column or `evolve` carries a brand-new column in)
-            carry = info["schema_cols"] | {op_col} | keep
-            carry |= set((evolve or {}).get(name, ()))
-            merge_src = deduped.drop(
-                *[c for c in deduped.columns if c not in carry]
-            )
-            # a non-preserving transform invalidates the pre-transform
-            # histogram: hand merge per_bucket=None so it recounts from
-            # the transformed rows (see docstring contract)
-            pb = (
-                per_table_buckets[name]
-                if fn is None or transforms_preserve_keys_and_validity
-                else None
-            )
-            _snap, mstats = handle.merge(
-                merge_src,
-                op_col=op_col,
-                per_bucket=pb,
-                lww_by=list(merge_lww_by) if merge_lww_by else None,
-                mode=merge_mode,
-            )
-            stats["tables"][name] = mstats
+        handles = {name: txn.table(name) for name in sorted(per_table_buckets)}
+        # the merges write disjoint tables (see module docstring). Each
+        # worker target is wrapped at submit time so it gets its OWN copy
+        # of this thread's local properties (job group, streaming query
+        # ids) — a shared copy would let one worker's setJobGroup retag
+        # the other's jobs. Leaving the pool waits for every worker, so a
+        # failure re-raises below only once nothing still writes, and the
+        # transaction exit aborts every branch.
+        workers = min(len(handles), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = {
+                name: pool.submit(
+                    inheritable_thread_target(spark)(_merge), name, handle
+                )
+                for name, handle in handles.items()
+            }
+        for name, fut in futures.items():
+            stats["tables"][name] = fut.result()
         stats["catalog_version"] = txn.commit()
 
     stats["rows_applied"] = sum(

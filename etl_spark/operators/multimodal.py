@@ -170,9 +170,16 @@ def decode_media_meta(df: DataFrame, data_col: str = "data") -> DataFrame:
                     widths.append(w); heights.append(h); durs.append(None)
                     sizes.append(len(blob))
                     continue
-                if raw[:2] == b"BM" and len(raw) >= 26:
-                    # BITMAPINFOHEADER: i32-LE width/height at offsets
-                    # 18/22; height may be negative (top-down rows)
+                if (
+                    raw[:2] == b"BM"
+                    and len(raw) >= 26
+                    and _st.unpack("<I", raw[14:18])[0] >= 40
+                ):
+                    # BITMAPINFOHEADER or later (DIB header size >= 40 at
+                    # offset 14): i32-LE width/height at offsets 18/22;
+                    # height may be negative (top-down rows). A 12-byte
+                    # OS/2 BITMAPCOREHEADER keeps u16 dims there, so it
+                    # falls through to the null-meta row below
                     w, h = _st.unpack("<ii", raw[18:26])
                     widths.append(abs(w)); heights.append(abs(h))
                     durs.append(None); sizes.append(len(blob))

@@ -2848,9 +2848,14 @@ def q_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 samples = np.frombuffer(pcm, dtype="<i2")
                 ids.append(did); kinds.append("audio")
                 blobs.append(encode_wav(samples, 1000))
+                # one COM segment holds <= 65533 bytes and SOF dims are
+                # 16-bit: clamp both so a document over 64 KiB yields a
+                # saturated width (the oracle's LEAST) instead of raising
                 ids.append(did); kinds.append("jpeg")
                 blobs.append(
-                    jpeg_header_fixture(len(data) + 1, 1, comment=data)
+                    jpeg_header_fixture(
+                        min(len(data) + 1, 0xFFFF), 1, comment=data[:0xFFFD]
+                    )
                 )
             yield pd.DataFrame({"doc_id": ids, "kind": kinds, "data": blobs})
 
@@ -2880,7 +2885,7 @@ SELECT doc_id,
        CAST(strlen(text) + 1 AS INTEGER) AS png_width,
        1 AS png_height,
        CAST(CEIL(strlen(text) / 2.0) AS INTEGER) AS wav_duration_ms,
-       CAST(strlen(text) + 1 AS INTEGER) AS jpeg_width,
+       CAST(LEAST(strlen(text) + 1, 65535) AS INTEGER) AS jpeg_width,
        1 AS jpeg_height
 FROM documents
 """
@@ -3451,11 +3456,11 @@ def q_streaming_cdc_replay_oracle(spark: SparkSession, sf_dir: str) -> DataFrame
         key=["conv_id", "turn_idx"],
         n_buckets=8,
     )
-    # max_files_per_trigger=4 forces multi-batch replay (exactly-once
-    # machinery under test); adaptive_trigger_rows rides along with a
-    # row target sized to ~2 segments so the r5 backlog-coalescing path
-    # is ALSO driver-attested — the converged state is trigger-sizing
-    # independent by construction
+    # max_files_per_trigger=1 is only the floor: adaptive_trigger_rows,
+    # a row target of half the changelog, sizes the triggers, so the
+    # replay still runs as ~2 batches (exactly-once machinery under
+    # test) AND the backlog-coalescing path is driver-attested — the
+    # converged state is trigger-sizing independent by construction
     run_stream(spark, wal, table, os.path.join(tmp, "state"),
                max_files_per_trigger=1,
                adaptive_trigger_rows=max(2, len(ch) // 2))

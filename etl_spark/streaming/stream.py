@@ -85,7 +85,6 @@ def adaptive_files_per_trigger(
     wal_dir: str,
     target_rows: int,
     floor: int,
-    already_processed: int = 0,
     sample_cap: int = 64,
 ) -> int:
     """Backlog-aware trigger sizing: estimate rows/segment from a sample
@@ -96,7 +95,10 @@ def adaptive_files_per_trigger(
     tiny segments then replays in a few driver actions instead of one
     per ``floor`` files, which is the measured per-batch driver-floor
     tax at sandbox scale (BENCH.md, skew replay). Sampling is capped so
-    a 10^5-segment backlog costs 64 footer reads, not 10^5."""
+    a 10^5-segment backlog costs 64 footer reads, not 10^5. The listing
+    is the whole WAL, applied segments included: a restarted stream may
+    get a larger trigger than its pending backlog needs, which changes
+    batch sizes, never the converged state."""
     import pyarrow.parquet as papq
 
     segs: list[str] = []
@@ -104,8 +106,7 @@ def adaptive_files_per_trigger(
         segs.extend(
             os.path.join(root, n) for n in names if n.endswith(".parquet")
         )
-    n_pending = max(0, len(segs) - already_processed)
-    if n_pending == 0:
+    if not segs:
         return floor
     # spread the sample across the listing so one partition's segment
     # size doesn't dominate the estimate
@@ -120,7 +121,7 @@ def adaptive_files_per_trigger(
             return floor
     avg = max(1.0, rows / max(1, len(sampled)))
     per_trigger = max(int(floor), int(target_rows // avg) or 1)
-    return min(per_trigger, n_pending) if n_pending > floor else floor
+    return min(per_trigger, len(segs)) if len(segs) > floor else floor
 
 
 @dataclass

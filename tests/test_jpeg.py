@@ -148,3 +148,59 @@ def test_decode_media_meta_gif_and_bmp_headers(spark):
     assert (out["b0"]["decoded_width"], out["b0"]["decoded_height"]) == (640, 480)
     assert out["g1"]["decoded_width"] is None
     assert out["b1"]["decoded_width"] is None
+
+
+def test_decode_media_meta_os2_bmp_core_header_degrades(spark):
+    """An OS/2 BITMAPCOREHEADER (DIB header size 12) stores u16 dims at
+    offsets 18/20, so the info-header i32 read would mix width, height
+    and planes into garbage; the decoder degrades it to a null meta row
+    while an info-header BMP in the same batch still decodes."""
+    from etl_spark.operators.multimodal import MEDIA_SCHEMA, decode_media_meta
+
+    core = (
+        b"BM" + struct.pack("<IHHI", 32, 0, 0, 26)
+        + struct.pack("<IHHHH", 12, 640, 480, 1, 24)
+        + b"\x00" * 6
+    )
+    info = (
+        b"BM" + struct.pack("<IHHI", 70, 0, 0, 54)
+        + struct.pack("<Iii", 40, 640, 480)
+        + b"\x00" * 24
+    )
+    rows = [
+        ("core", "image", "image/bmp", core, (0, 0, 0, len(core))),
+        ("info", "image", "image/bmp", info, (0, 0, 0, len(info))),
+    ]
+    out = {
+        r["asset_id"]: r
+        for r in decode_media_meta(
+            spark.createDataFrame(rows, MEDIA_SCHEMA)
+        ).collect()
+    }
+    assert out["core"]["decoded_width"] is None
+    assert out["core"]["decoded_height"] is None
+    assert out["core"]["payload_bytes"] is None
+    assert (out["info"]["decoded_width"], out["info"]["decoded_height"]) == (
+        640, 480,
+    )
+
+
+def test_multimodal_roundtrip_document_over_64k_degrades(spark, tmp_path):
+    """A document longer than one JPEG COM segment and the 16-bit SOF
+    width still round-trips: the fixture clamps both, so the decoded
+    JPEG width saturates at 65535 (the oracle's LEAST) while the PNG and
+    WAV dimensions keep the full length."""
+    import pandas as pd
+
+    from etl_spark.queries import q_multimodal_roundtrip
+
+    pd.DataFrame(
+        {"doc_id": [1, 2], "text": ["x" * 70_000, "hi"]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    got = {
+        r["doc_id"]: r
+        for r in q_multimodal_roundtrip(spark, str(tmp_path)).collect()
+    }
+    assert (got[1]["png_width"], got[1]["wav_duration_ms"]) == (70_001, 35_000)
+    assert (got[1]["jpeg_width"], got[1]["jpeg_height"]) == (65535, 1)
+    assert (got[2]["png_width"], got[2]["jpeg_width"]) == (3, 3)

@@ -12,8 +12,11 @@ frame's executed plan, and diffs against the committed manifest.
 
 Counted per entry:
   exchanges   "Exchange hashpartitioning"/"Exchange rangepartitioning"
-              (shuffles; "BroadcastExchange" contains the bare substring
-              "Exchange", so bare-substring counting would lie)
+              (shuffles) plus "Exchange SinglePartition" (the
+              all-to-one shuffle under global aggregates, limits and
+              windows without a partition key); "BroadcastExchange"
+              contains the bare substring "Exchange", so bare-substring
+              counting would lie
   broadcasts  "BroadcastExchange"
   expands     "Expand" (unpivot/rollup row multiplication)
 
